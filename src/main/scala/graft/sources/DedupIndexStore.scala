@@ -118,7 +118,13 @@ object DedupIndexStore {
     key match {
       case Some(k) =>
         val name = s"graft_idx_${family}_${md5(k + "|" + params)}"
-        built.computeIfAbsent(name, write)
+        // the registry is JVM-wide but a table lives in one catalog: a
+        // hit whose table the active catalog lacks (a new SparkContext,
+        // a DROP TABLE) rebuilds instead of naming a missing table
+        val catalog = SparkSession.active.catalog
+        built.compute(name, (_, prev) =>
+          if (prev != null && catalog.tableExists(prev)) prev
+          else write(name))
       case None => write(s"graft_idx_${family}_tmp${seq.incrementAndGet()}")
     }
   }
@@ -293,7 +299,7 @@ object DedupIndexStore {
     * one multi-path scan and measure FLAT in segment count — for
     * them this ceiling is maintenance hygiene (it bounds stored
     * bucket-row amplification and the cap-recovery aggregation's
-    * input), with [[segProbeReadAmpBp]] + the `IfAmplified` verbs as
+    * input), with [[segProbeReadAmpBp]] + [[compactMinhashIfAmplified]] as
     * the precise instrument. The ANN family amortizes segments
     * against a rerank-join floor and keeps a higher ceiling
     * ([[AnnIndexStore.DefaultMaxSegments]]). */
@@ -494,8 +500,8 @@ object DedupIndexStore {
     * scan scheduling but no per-bucket re-reading, while appends that
     * keep hitting the same buckets (the near-dup-heavy ingest that
     * actually needs compaction soonest) drive the ratio toward the
-    * count. [[segProbeReadAmpBp]] reads it; the `IfAmplified` verbs
-    * act on it. */
+    * count. [[segProbeReadAmpBp]] reads it;
+    * [[compactMinhashIfAmplified]] acts on it. */
   def segProbeMetricSurvName(family: String): String =
     s"graft_seg_probe_${family}_surv"
 
@@ -528,7 +534,7 @@ object DedupIndexStore {
     * action (observe metrics materialize with the job) or if
     * `probed` is not a segment probe of `family`. This is the
     * serve-side signal a production maintenance loop feeds to
-    * [[compactMinhashIfAmplified]] (etc.): serving runs constantly
+    * [[compactMinhashIfAmplified]]: serving runs constantly
     * anyway, so the amplification is free telemetry, and the loop
     * compacts when serving — not a segment counter — says the list
     * has gone heavy. */
@@ -859,22 +865,6 @@ object DedupIndexStore {
     if (!segProbeReadAmpBp(lastProbe, "minhash").exists(_ > maxAmpBp))
       Left(idx)
     else Right(compactMinhashSegments(spark, idx, maxBucket, buckets))
-
-  def compactSimhashIfAmplified(spark: SparkSession,
-      idx: SegmentedSimhash, lastProbe: DataFrame,
-      maxAmpBp: Long = KneeAmpBp, maxBucket: Int = 65535,
-      buckets: Int = 8): Either[SegmentedSimhash, SimhashIndex] =
-    if (!segProbeReadAmpBp(lastProbe, "simhash").exists(_ > maxAmpBp))
-      Left(idx)
-    else Right(compactSimhashSegments(spark, idx, maxBucket, buckets))
-
-  def compactEmbeddingIfAmplified(spark: SparkSession,
-      idx: SegmentedEmbedding, lastProbe: DataFrame,
-      maxAmpBp: Long = KneeAmpBp, maxBucket: Int = 10000,
-      buckets: Int = 8): Either[SegmentedEmbedding, EmbeddingIndex] =
-    if (!segProbeReadAmpBp(lastProbe, "embedding").exists(_ > maxAmpBp))
-      Left(idx)
-    else Right(compactEmbeddingSegments(spark, idx, maxBucket, buckets))
 
   /** Read a stored segment-table list as ONE relation. A single table
     * passes through as its bucketed catalog scan (exchange-free

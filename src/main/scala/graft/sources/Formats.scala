@@ -63,15 +63,6 @@ object Formats {
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").json(path)
 
-  def readText(s: SparkSession, path: String): DataFrame =
-    s.read.text(path)
-
-  def readParquet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
-
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
-
   def readOrc(s: SparkSession, path: String): DataFrame =
     s.read.orc(path)
 

@@ -6,7 +6,8 @@ import graft.functions.Tokenizer
 import graft.operators.EventOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** Per-user running total — output row of [[EventStreams.userRunningCounts]]. */
@@ -447,16 +448,8 @@ object EventStreams extends Serializable {
     val qname = label + "_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
     val spark = out.sparkSession
-    withDrainShufflePartitions(spark) {
-      // awaitTermination stays INSIDE the scope: the stream thread
-      // clones the session (and its conf) after start() returns, so
-      // restoring before the query finishes would race the clone
-      val q = out.writeStream.format("memory").queryName(qname)
-        .outputMode(mode)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    runDrain(spark, out.writeStream.format("memory").queryName(qname)
+      .outputMode(mode))
     val sink = spark.table(qname)
     val rows = spark.createDataFrame(sink.collectAsList(), sink.schema)
     spark.catalog.dropTempView(qname)
@@ -477,18 +470,50 @@ object EventStreams extends Serializable {
     * the shared oracles gate that per round). */
   private val DrainShufflePartitions = 8
 
-  /** Run `body` (which must START and fully EXECUTE any streaming
-    * query it creates) with the drain-scoped shuffle-partition
-    * setting, restoring the session value after. Stateful operators
-    * read the conf when the query plans its first micro-batch, so
-    * setting it around start()/awaitTermination() is sufficient and
-    * airtight — the harness runs queries sequentially. */
-  private def withDrainShufflePartitions[T](spark: SparkSession)(
-      body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, DrainShufflePartitions.toString)
-    try body finally spark.conf.set(key, prev)
+  private val CheckpointLocationKey = "spark.sql.streaming.checkpointLocation"
+
+  /** Session conf every drain runs under. Besides the partition count,
+    * the checkpoint file manager: Spark's default FileContext manager
+    * renames on `file:` through `getFileLinkStatus` twice, and without
+    * libhadoop each call forks a `readlink` process — on every WAL
+    * entry, commit-log entry and state-store delta. The FileSystem
+    * manager commits with `exists` plus one `RawLocalFileSystem.rename`,
+    * a single atomic rename(2), and forks nothing (PERF.md §"Fork-free
+    * drain checkpoints"). State-file checksums and Hadoop `.crc` files
+    * are untouched. */
+  private[graft] val DrainConf: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> DrainShufflePartitions.toString,
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      ("org.apache.spark.sql.execution.streaming.checkpointing." +
+        "FileSystemBasedCheckpointFileManager"))
+
+  /** The one place a drain starts a streaming query: `writer` runs
+    * AvailableNow (terminates when the bounded source is exhausted)
+    * from start() through awaitTermination() with [[DrainConf]] set on
+    * the session, and every key is restored exactly afterwards — also
+    * when the query fails; a key that was unset stays unset.
+    * awaitTermination stays INSIDE the scope: the stream thread clones
+    * the session (and its conf) after start() returns, and stateful
+    * operators and the checkpoint manager read the conf when each
+    * micro-batch plans, so restoring early would race the clone. A
+    * session-wide checkpoint location is refused: drains run on Spark's
+    * local temporary checkpoint, which the FileSystem manager is chosen
+    * for and which is deleted when the query stops. */
+  private[graft] def runDrain[T](spark: SparkSession,
+      writer: DataStreamWriter[T]): Unit = {
+    // getAll holds only the keys set on the session (getOption would
+    // report a registered default as set and the restore would pin it)
+    val set = spark.conf.getAll
+    require(!set.contains(CheckpointLocationKey),
+      s"runDrain: $CheckpointLocationKey is set on the session; " +
+        "drains run on Spark's local temporary checkpoint — unset it")
+    val prev = DrainConf.map { case (k, _) => k -> set.get(k) }
+    DrainConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    try writer.trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** [[drain]] in COMPLETE output mode — for bounded replays of
@@ -543,16 +568,13 @@ object EventStreams extends Serializable {
       val (stream, tmp) = replayAsMicroBatches(batch, idCol, nBatches,
         tail)
       try {
-        val q = transform(stream).writeStream
+        runDrain(spark, transform(stream).writeStream
           .foreachBatch {
             (df: org.apache.spark.sql.Dataset[
                org.apache.spark.sql.Row], _: Long) =>
               acc.add(df.count())
           }
-          .outputMode(mode)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .outputMode(mode))
       } finally deleteReplayDir(tmp)
     }
     created.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
@@ -752,17 +774,14 @@ object EventStreams extends Serializable {
     val buf =
       scala.collection.mutable.ArrayBuffer.empty[(Long, DecayCount)]
     try {
-      val q = decayedCountsStream(stream, halfLifeDays,
+      runDrain(spark, decayedCountsStream(stream, halfLifeDays,
           asOfDay = Some(dMax))
         .writeStream
         .outputMode(OutputMode.Update())
         .foreachBatch { (ds: Dataset[DecayCount], batchId: Long) =>
           val rows = ds.collect() // |types| rows per batch — bounded
           buf.synchronized { rows.foreach(r => buf += ((batchId, r))) }
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        })
     } finally tmp.foreach(deleteReplayDir)
     val finals = buf.synchronized {
       buf.groupBy(_._2.event_type).values.map(_.maxBy(_._1)._2).toSeq
@@ -1718,12 +1737,8 @@ object EventStreams extends Serializable {
     val state = new ClusterMapState(baseAssign.toDF("id", "cluster"))
     val (stream, tmp) = replayForDrain(deltaEdges.toDF("a", "b"), "a",
       nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = clusterMapStream(stream, state)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally tmp.foreach(deleteReplayDir)
+    try runDrain(spark, clusterMapStream(stream, state))
+    finally tmp.foreach(deleteReplayDir)
     val m = state.current
     val folded = spark.createDataFrame(m.collectAsList(), m.schema)
       .toDF("doc_id", "cluster")
@@ -1746,25 +1761,22 @@ object EventStreams extends Serializable {
     * delta over the run's start should be 0. */
   private[graft] def rehearseClusterMapFold(baseAssign: DataFrame,
       deltaEdges: DataFrame, nBatches: Int = 3): (Long, Int) = {
-    val sc = baseAssign.sparkSession.sparkContext
+    val spark = baseAssign.sparkSession
+    val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.size
     val state = new ClusterMapState(baseAssign.toDF("id", "cluster"))
     val (stream, tmp) =
       replayAsMicroBatches(deltaEdges.toDF("a", "b"), "a", nBatches)
-    try {
-      val q = clusterMapStream(stream, state)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally deleteReplayDir(tmp)
+    try runDrain(spark, clusterMapStream(stream, state))
+    finally deleteReplayDir(tmp)
     val n = state.current.count()
     state.release()
     (n, sc.getPersistentRDDs.size - before)
   }
 
   /** Wire an edge stream into a [[ClusterMapState]] — one
-    * `foreachBatch` fold per micro-batch; start()/processAllAvailable
-    * on the returned writer, then read `state.current`. */
+    * `foreachBatch` fold per micro-batch; run the returned writer
+    * with [[runDrain]], then read `state.current`. */
   def clusterMapStream(edges: DataFrame, state: ClusterMapState):
       org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row] =
@@ -1804,21 +1816,18 @@ object EventStreams extends Serializable {
         phrase)
     val (stream, tmp) = replayForDrain(
       deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
+    try {
       // each fold's registry key chains on the predecessor table's
       // name, so bench re-runs that hit the replay-dir cache also
       // reuse the fold tables — the deployment cost model (an ingest
       // folds once; queries serve from storage)
-      val q = stream.writeStream
+      runDrain(spark, stream.writeStream
         .outputMode(OutputMode.Update())
         .foreachBatch((batch: DataFrame, _: Long) => {
           idx.set(graft.sources.PostingsStore.refreshPostings(spark,
             idx.get, batch, buckets))
           ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }))
     } finally tmp.foreach(deleteReplayDir)
     graft.sources.PostingsStore.phraseSearch(spark, idx.get, phrase)
   }
@@ -1848,8 +1857,8 @@ object EventStreams extends Serializable {
         idx.get, phrase)
     val (stream, tmp) = replayForDrain(
       deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
+    try {
+      runDrain(spark, stream.writeStream
         .outputMode(OutputMode.Update())
         .foreachBatch((batch: DataFrame, _: Long) => {
           // the LSM trigger check rides every fold: append O(batch),
@@ -1860,10 +1869,7 @@ object EventStreams extends Serializable {
             graft.sources.PostingsStore.appendSegment(idx.get,
               batch, buckets), maxSegments, buckets))
           ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }))
     } finally tmp.foreach(deleteReplayDir)
     graft.sources.PostingsStore.phraseSearchSeg(spark, idx.get, phrase)
   }
@@ -1896,8 +1902,8 @@ object EventStreams extends Serializable {
       return DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
     val (stream, tmp) = replayForDrain(
       deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
+    try {
+      runDrain(spark, stream.writeStream
         .outputMode(OutputMode.Update())
         .foreachBatch((batch: DataFrame, _: Long) => {
           val appended = DedupIndexStore.appendMinhashSegment(idx.get,
@@ -1908,10 +1914,7 @@ object EventStreams extends Serializable {
               DedupIndexStore.compactMinhashSegments(spark, appended,
                 maxBucket = Int.MaxValue, buckets = buckets))))
           ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }))
     } finally tmp.foreach(deleteReplayDir)
     DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
   }
@@ -1966,8 +1969,8 @@ object EventStreams extends Serializable {
       pmod(xxhash64(col("doc_id")), lit(TelemetryServeSample)) === 0)
     val (stream, tmp) = replayForDrain(
       deltaDocs.select(col("doc_id"), col("text")), "doc_id", nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
+    try {
+      runDrain(spark, stream.writeStream
         .outputMode(OutputMode.Update())
         .foreachBatch((batch: DataFrame, id: Long) => {
           val appended = DedupIndexStore.appendMinhashSegment(idx.get,
@@ -1991,10 +1994,7 @@ object EventStreams extends Serializable {
             })
           } else idx.set(appended)
           ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }))
     } finally tmp.foreach(deleteReplayDir)
     DedupIndexStore.probeMinhashSeg(spark, idx.get, probeDocs)
   }
@@ -2028,8 +2028,8 @@ object EventStreams extends Serializable {
     val (stream, tmp) = replayForDrain(
       deltaVecs.select(col("vec_id"), col("embedding")), "vec_id",
       nBatches)
-    try withDrainShufflePartitions(spark) {
-      val q = stream.writeStream
+    try {
+      runDrain(spark, stream.writeStream
         .outputMode(OutputMode.Update())
         .foreachBatch((batch: DataFrame, _: Long) => {
           // append O(batch), then the LSM trigger check — compacts
@@ -2038,10 +2038,7 @@ object EventStreams extends Serializable {
             graft.sources.AnnIndexStore.refreshIvfPqIndex(spark,
               idx.get, batch, buckets), maxSegments, buckets))
           ()
-        })
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        }))
     } finally tmp.foreach(deleteReplayDir)
     graft.sources.AnnIndexStore.probeIvfPq(spark, idx.get, queries, k,
       nProbe, refine)

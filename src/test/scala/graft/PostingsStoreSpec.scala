@@ -409,4 +409,19 @@ class PostingsStoreSpec extends SparkSpec {
     assert(PostingsStore.phraseSearch(spark, idx, none).isEmpty &&
       CorpusOps.phraseSearch(docs, none).isEmpty)
   }
+
+  test("stored-index registry rebuilds a table its catalog lost: " +
+      "q_bm25_stored, DROP TABLE, q_bm25_stored again, same answer") {
+    val row = SparkEntry.queries("q_bm25_stored")
+    val first = rows(row(spark, sfDir))
+    assert(first.nonEmpty)
+    // a registry hit names the row's tables without building anything
+    val idx = PostingsStore.writePostings(
+      graft.sources.Tables.documents(spark, sfDir))
+    Seq(idx.table, idx.doclensTable).foreach(t =>
+      spark.sql(s"DROP TABLE $t"))
+    assert(rows(row(spark, sfDir)) == first)
+    assert(spark.catalog.tableExists(idx.table) &&
+      spark.catalog.tableExists(idx.doclensTable))
+  }
 }

@@ -977,4 +977,133 @@ class StreamingSpec extends SparkSpec {
       .select($"decay_e6").as[Long].head()
     assert(bRow == 9765L && bRow != 1250000L)
   }
+
+  // ---- the drain runner: scoped conf, restored exactly ----
+
+  private val drainKeys = EventStreams.DrainConf.map(_._1)
+  private val fsManager = "FileSystemBasedCheckpointFileManager"
+
+  private def drainKeyState: Map[String, Option[String]] = {
+    val set = spark.conf.getAll
+    drainKeys.map(k => k -> set.get(k)).toMap
+  }
+
+  private def checkpointManager(s: org.apache.spark.sql.SparkSession)
+      : String = {
+    import org.apache.spark.sql.execution.streaming.checkpointing
+      .CheckpointFileManager
+    val dir = Files.createTempDirectory("graft-chk-probe").toString
+    CheckpointFileManager.create(new org.apache.hadoop.fs.Path(dir),
+      s.sessionState.newHadoopConf()).getClass.getSimpleName
+  }
+
+  /** A bounded one-file parquet stream — AvailableNow drains it in one
+    * micro-batch. */
+  private def oneRowStream(): DataFrame = {
+    val dir = Files.createTempDirectory("graft-one-row").toString
+    spark.range(1).write.mode("overwrite").parquet(dir)
+    spark.readStream.schema(spark.range(1).schema).parquet(dir)
+  }
+
+  test("drain runner: FileSystem checkpoint manager in the scope and " +
+      "on the stream thread; both keys restored, unset stays unset") {
+    val before = drainKeyState
+    assert(before("spark.sql.streaming.checkpointFileManagerClass")
+      .isEmpty, "the test session must leave the manager class unset")
+    assert(checkpointManager(spark) != fsManager)
+    // (outer session's manager, stream clone's manager, clone's
+    // shuffle partitions) seen from inside the running query
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, String)]()
+    EventStreams.runDrain(spark, oneRowStream().writeStream
+      .foreachBatch((b: DataFrame, _: Long) => {
+        seen.add((checkpointManager(spark),
+          checkpointManager(b.sparkSession),
+          b.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+        ()
+      }))
+    assert(!seen.isEmpty)
+    seen.forEach(v => assert(v == ((fsManager, fsManager, "8"))))
+    assert(drainKeyState == before)
+  }
+
+  test("drain runner: conf restored after the query fails; a preset " +
+      "checkpointLocation fails the runner's require") {
+    val before = drainKeyState
+    val fail: (DataFrame, Long) => Unit =
+      (_, _) => throw new IllegalStateException("fold failed")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStreams.runDrain(spark, oneRowStream().writeStream
+        .foreachBatch(fail))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage == "fold failed"))
+    assert(drainKeyState == before)
+    val key = "spark.sql.streaming.checkpointLocation"
+    val chk = Files.createTempDirectory("graft-preset-chk").toString
+    spark.conf.set(key, chk)
+    try {
+      val e = intercept[IllegalArgumentException] {
+        EventStreams.runDrain(spark, oneRowStream().writeStream
+          .format("noop"))
+      }
+      assert(e.getMessage.contains("runDrain") &&
+        e.getMessage.contains(key))
+    } finally spark.conf.unset(key)
+    assert(drainKeyState == before)
+  }
+
+  test("runner sites with no oracle row: the count sink and the " +
+      "cluster-map fold rehearsal equal their batch and drained twins") {
+    import org.apache.spark.sql.functions._
+    val corpus = spark.read.parquet(s"$sfDir/documents.parquet")
+    val (baseCorpus, batch) =
+      graft.operators.Dedup.splitIncremental(corpus)
+    val baseFps = baseCorpus
+      .select(graft.functions.TextAnalysis.fingerprintMd5(col("text"))
+        .as("fp_md5"))
+      .distinct()
+    assert(EventStreams.replayThroughCountSink(batch, "doc_id",
+      s => EventStreams.incrementalDedupStream(s, baseFps)) ==
+      graft.operators.Dedup.incrementalExact(baseCorpus, batch).count())
+    val pairs = graft.operators.Dedup.ngramJaccard(corpus, n = 3,
+      threshold = 0.8).select(col("doc_a"), col("doc_b"))
+    val baseA = pmod(col("doc_a"), lit(4)) =!= 0
+    val baseB = pmod(col("doc_b"), lit(4)) =!= 0
+    val baseAssign = graft.operators.Clustering.clustersFromPairs(
+      pairs.filter(baseA && baseB),
+      corpus.filter(pmod(col("doc_id"), lit(4)) =!= 0)
+        .select(col("doc_id")))
+    val delta = pairs.filter(!baseA || !baseB)
+    assert(!delta.isEmpty, "fixture must leave delta edges to fold")
+    val (n, pinned) = EventStreams.rehearseClusterMapFold(baseAssign,
+      delta)
+    // no new nodes: the drained map is exactly the folded state
+    val drained = EventStreams.drainClusterMap(baseAssign, delta,
+      corpus.select(col("doc_id")).limit(0))
+    // pinned is the persistent-RDD delta over the fold: nothing may
+    // accumulate; it can read below 0 when an earlier test's
+    // non-blocking unpersist lands during the call
+    assert(n == drained.count() && pinned <= 0)
+  }
+
+  test("grep guard: the drain runner is the only streaming start() " +
+      "in src/main") {
+    import scala.jdk.CollectionConverters._
+    val ws = Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files = try ws.iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toVector finally ws.close()
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f,
+        java.nio.charset.StandardCharsets.UTF_8).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("*") && !code.startsWith("//") &&
+        (code.contains(".start()") || code.contains("awaitTermination("))
+    } yield s"${f.getFileName}:${i + 1}: $code"
+    assert(hits.size == 1 && hits.head.startsWith("EventStreams.scala:") &&
+      hits.head.endsWith(
+        "writer.trigger(Trigger.AvailableNow()).start().awaitTermination()"),
+      hits.mkString("\n"))
+  }
 }
